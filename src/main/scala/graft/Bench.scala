@@ -590,8 +590,8 @@ object Bench {
         java.nio.file.Paths.get("docs/BENCH_driver_last.json"), fullJson + "\n")
       // ALSO write a round-stamped copy so per-query history survives in
       // git (the round-6 judge could not diff r5→r6 beyond the slowest-5
-      // because last.json is overwritten). Round inference is shared
-      // with the StreamsSpec audit ([[RoundStamp]]). ONLY full runs at
+      // because last.json is overwritten). Round inference is
+      // [[RoundStamp]]'s. ONLY full runs at
       // the driver's sf0.1 dir stamp the round artifact (round-7
       // advice, tightened round-8): a filtered/subset run OR a full run
       // against a scale fixture (10× replicas live under /tmp) would

@@ -12,7 +12,7 @@ object Plans {
     // InMemoryRelation reuse exactly as they do for a real user.
     val keys = SparkEntry.queries.keys.toSeq.sorted
     val sb = new StringBuilder
-    sb.append("# Physical plans (sf0.01, local[32], AQE final plans)\n\n")
+    sb.append(s"# Physical plans (sf0.01, ${spark.sparkContext.master}, AQE final plans)\n\n")
     sb.append(s"Generated by `graft.Plans` over all ${keys.size} registered queries; " +
       "regenerate after plan-affecting changes.\n")
     keys.foreach { k =>

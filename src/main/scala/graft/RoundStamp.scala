@@ -6,9 +6,8 @@ package graft
   * BENCH_r files and no docs/ + build.sbt anchor), so round-stamped
   * artifacts are SKIPPED rather than written as a bogus r01 that would
   * clobber the real round-1 history — exactly the data loss the
-  * stamping exists to prevent. Single source of truth for Bench
-  * (BENCH_driver_r{N}.json) and the StreamsSpec audit
-  * (STREAMS_r{N}.json) so the two cannot drift. */
+  * stamping exists to prevent. Used by Bench for
+  * docs/BENCH_driver_r{N}.json. */
 object RoundStamp {
   def current(): Option[Int] = {
     val pat = java.util.regex.Pattern.compile("BENCH_r(\\d+)\\.json")

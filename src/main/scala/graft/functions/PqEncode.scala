@@ -13,14 +13,15 @@ import org.apache.spark.sql.types.{ArrayType, ByteType, DataType, FloatType, Int
   * (vnᵢ = rndAway(vᵢ·1e6), the q61 determinism argument — the product
   * of a 24-bit-mantissa float and 1e6 is exact in double).
   *
-  * Replaces `VectorOps.encodePqUdf` (round 14, VERDICT r13 item 7 —
+  * Replaces the `encodePqUdf` UDF (round 14, VERDICT r13 item 7 —
   * the last interpreted per-row closure in the ANN encode stage): the
   * UDF form paid a CatalystTypeConverters round trip per corpus row
   * (ArrayData → boxed Seq[Float] in, Seq[Byte] → ArrayData out) around
   * the same primitive loops. As an expression the floats are read from
   * the Tungsten array in place and the codes leave as one
   * UnsafeArrayData.fromPrimitiveArray — no boxing anywhere.
-  * PqEncodeSpec pins bitwise equality with the retained reference UDF.
+  * PqEncodeSpec pins bitwise equality with that UDF, kept as the
+  * tests' reference (`PqReference.encodePqUdf`).
   *
   * The flattened codebook rides as a foldable literal
   * (m·ksub·dsub longs ≈ 128 KB at q79's geometry) — plan-side model
@@ -83,7 +84,8 @@ object PqEncode {
     * (held in the codegen references array), but a GenericArrayData
     * literal UNBOXES on every getLong — m·ksub·dsub ≈ 16k unboxings per
     * row, measured SLOWER than the captured-primitive-array UDF this
-    * expression replaces (ProbePqEncodeAB: 0.162 vs 0.089 cpu-s).
+    * expression replaces (0.162 vs 0.089 cpu-s; commit 3300fb5,
+    * OPTIMIZATION_r14.md).
     * Materialize the primitive long[] once per (thread, literal) and
     * re-use it by REFERENCE identity — hit rate ~100% because codegen
     * passes the same object every row. */

@@ -23,16 +23,7 @@ object Graph {
 
   private val Rounds = 3
   private val Damping = 0.85
-  /** q88's closure-check broadcast gate: below this many directed edges
-    * the (src < dst) half broadcasts (~16 bytes/row → ≤ ~64 MB at the
-    * gate) and the much larger wedge stream — W ≈ E^1.5 worst case, 17×
-    * E on this corpus — never shuffles; above it the closure check is a
-    * plain shuffle equi-join. The q28/q46 runtime-size-gate pattern
-    * (PlanSpec exempts q88 on the same grounds; GraphSpec forces both
-    * sides and equates them). */
-  private[graft] val EdgeBroadcastLimit = 8000000L
-  /** q88's CSR-kernel gate (round 10), deliberately far above
-    * [[EdgeBroadcastLimit]]: the kernel broadcasts the oriented
+  /** q88's CSR-kernel gate (round 10): the kernel broadcasts the oriented
     * adjacency as a CSR at 4 BYTES/edge (int indices + node-sized
     * indptr — 512 MB at this limit, a standard high-memory-executor
     * broadcast budget), while the past-gate intersect dataflow's
@@ -43,9 +34,9 @@ object Graph {
     * shuffle dataflow remains the only shape that needs no replicated
     * adjacency.
     *
-    * Driver budget at the ceiling, MEASURED (round 11,
-    * tools/ProbeCsrPack 128 4 — a synthetic 128M-edge / 4M-node graph,
-    * the probe's documented gate-ceiling invocation; the 8 B-per-
+    * Driver budget at the ceiling, MEASURED (round 11, commit d59012d,
+    * docs/SCALE30X.md — a synthetic 128M-edge / 4M-node graph at the
+    * gate ceiling; the 8 B-per-
     * partition-distinct-src term scales with node count, so the node
     * figure matters):
     * the pack collects primitive-packed per-partition blocks —
@@ -293,11 +284,11 @@ object Graph {
     * forces both sides and equates them bitwise. */
   private[graft] val NodeBroadcastLimit = 4000000L
 
-  /** Round-9 gate measurements ([[graft.tools.ProbeGraphGate]],
-    * interleaved A/B/A/B, edge frame prewarmed, per-generation memos
-    * evicted between runs) split by query AND by methodology:
-    * steady-state (one hot JVM, repeated runs) has the mail-SHUFFLE
-    * side winning everywhere — q85 3.3–3.5 s vs 4.0–4.2 broadcast,
+  /** Round-9 gate measurements (commit d8332b5, OPTIMIZATION_r13.md
+    * graph-family row; interleaved A/B/A/B, edge frame prewarmed,
+    * per-generation memos evicted between runs) split by query AND by
+    * methodology: steady-state (one hot JVM, repeated runs) has the
+    * mail-SHUFFLE side winning everywhere — q85 3.3–3.5 s vs 4.0–4.2 broadcast,
     * q90 3.4–3.7 vs 4.6–5.0, q98 3.8–4.2 vs 4.9–5.4 — because each
     * broadcast round is a sequential driver-collect barrier. But
     * bench-style (fresh JVM, per-query sf0.001 warmup, one timed shot)
@@ -439,11 +430,11 @@ object Graph {
   /** Primitive-packed collect of a two-column (Int, Long) frame — ONE
     * (indexes, values) block per partition instead of n boxed Rows.
     * The packCsr lesson applied to the per-round kernel merges
-    * (VERDICT r11 item 4, measured by tools/ProbeKernelMerge at the
-    * 4M-node NodeBroadcastLimit ceiling): the boxed Row collect cost
-    * ~505 B/node of transient driver heap (~2.0 GB per round; the
-    * typed Tuple2 collect was worse at ~683 B/node) against the
-    * 12 B/node the payload actually needs. */
+    * (VERDICT r11 item 4, measured at the 4M-node NodeBroadcastLimit
+    * ceiling — commit 6af9510, docs/SCALE100X.md): the boxed Row
+    * collect cost ~505 B/node of transient driver heap (~2.0 GB per
+    * round; the typed Tuple2 collect was worse at ~683 B/node) against
+    * the 12 B/node the payload actually needs. */
   private[graft] def collectPackedIntLong(df: DataFrame)
       : Array[(Array[Int], Array[Long])] =
     df.queryExecution.toRdd.mapPartitions { it =>
@@ -883,9 +874,10 @@ object Graph {
     * unchanged (its shuffle-hash shape is the 100 TB path). */
   /** Distributed-group-then-pack of an oriented edge RDD into a driver
     * CSR (indptr, indices over dense node indexes). Exposed separately
-    * from [[trianglesKernel]] so tools/ProbeCsrPack can measure the
-    * REAL pack path's driver footprint at synthetic near-gate sizes —
-    * the measurement [[TriangleCsrEdgeLimit]]'s budget is justified by. */
+    * from [[trianglesKernel]] so the REAL pack path's driver footprint
+    * could be measured at synthetic near-gate sizes (commit d59012d,
+    * docs/SCALE30X.md) — the measurement [[TriangleCsrEdgeLimit]]'s
+    * budget is justified by. */
   private[graft] def packCsr(edges: org.apache.spark.rdd.RDD[(Long, Long)],
       bIds: org.apache.spark.broadcast.Broadcast[Array[Long]], n: Int)
       : (Array[Int], Array[Int]) = {
@@ -954,8 +946,9 @@ object Graph {
     // array headers); the packed blocks are 4 B/edge + 8 B per
     // (partition-local distinct src), measured 10.0 B/edge total
     // transient incl. the final CSR at the synthetic gate ceiling
-    // (tools/ProbeCsrPack — the number the 128M-edge gate's budget is
-    // now justified by: 10.0 B/edge ≈ 1.28 GB driver at the ceiling).
+    // (commit d59012d, docs/SCALE30X.md — the number the 128M-edge
+    // gate's budget is now justified by: 10.0 B/edge ≈ 1.28 GB
+    // driver at the ceiling).
     val (indptr, indices) = packCsr(orientOf(e).as[(Long, Long)].rdd, bIds, n)
     val bCsr = track(s.sparkContext.broadcast((indptr, indices)))
     // pivot sweep sized to the INTERSECT work (~Σ walk lengths), not the
@@ -1149,8 +1142,9 @@ object Graph {
     * final round stays distributed through the same groupBy(i).min so
     * the output plan ends in-cluster (the [[kernelRounds]] discipline).
     * Past the gate the callers keep their measured mail-shuffle
-    * dataflows ([[ssspGated]]/[[labelPropGated]], round-9 ProbeGraphGate
-    * evidence) — the kernel replaces only the below-gate regime, where
+    * dataflows ([[ssspGated]]/[[labelPropGated]], round-9 gate
+    * evidence, commit d8332b5) — the kernel replaces only the
+    * below-gate regime, where
     * the round-10 profile showed codec and scheduling constants, not
     * arithmetic, dominating node-sized rounds. GraphSpec equates the
     * kernel against both Catalyst dataflows and the sequential replays. */
@@ -1242,7 +1236,8 @@ object Graph {
       // KERNEL over the object-RDD adjacency (see [[minPropKernel]]);
       // past it, the round-9 mail-shuffle default — the measured winner
       // for the min-propagation rounds among the CATALYST dataflows in
-      // both methodologies (ProbeGraphGate steady-state 3.4-3.7 s vs
+      // both methodologies (round-9 gate A/B, commit d8332b5:
+      // steady-state 3.4-3.7 s vs
       // 4.6-5.0 broadcast, bench-style 3.2 vs 3.7) and the
       // 1000-executor posture (mail moves once to the persisted edge
       // partitioning instead of through a per-round driver collect)
@@ -1354,7 +1349,8 @@ object Graph {
       // KERNEL (labels propagate with increment 0; see
       // [[minPropKernel]]); past it, the round-9 mail-shuffle default —
       // winner among the Catalyst dataflows in both methodologies like
-      // q90 (ProbeGraphGate steady-state 3.8-4.2 s vs 4.9-5.4
+      // q90 (round-9 gate A/B, commit d8332b5: steady-state 3.8-4.2 s
+      // vs 4.9-5.4
       // broadcast, bench-style 3.7 vs 4.0; see the pagerankOf note)
       val edges = coPurchaseEdges(s, dir)
       val stat = graphStat("coPurchaseEdges", s, dir)

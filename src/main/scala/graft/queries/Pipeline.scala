@@ -825,9 +825,10 @@ object Pipeline {
     // Context counts come from the bigram counts themselves — c(w1,·) =
     // Σ_w2 c(w1,w2) exactly, as a window sum over the model table — so
     // the model needs ONE corpus tokenize+explode pass, not two (r13,
-    // ProbeQ67: the separate c1 pass re-ran scan+regex+explode because
-    // the null-filter asymmetry of the former c1 join blocked exchange
-    // reuse; the window runs on the distinct-bigram table, which stays
+    // commit bc367f8, OPTIMIZATION_r13.md: the separate c1 pass re-ran
+    // scan+regex+explode because the null-filter asymmetry of the
+    // former c1 join blocked exchange reuse; the window runs on the
+    // distinct-bigram table, which stays
     // model-sized at 100 TB while the saved pass is corpus-sized. Warm
     // sf0.1 CPU 1.10 → 0.95 s, cold wall 3.45 → 2.28 s).
     // Skew note (ADVICE r13): WindowExec buffers each w1 group, so

@@ -709,8 +709,8 @@ object TextOps {
   /** Doc-count mark above which the LSH path's exact verify runs behind
     * the BucketCountSig sift instead of the raw array attach. Lossless
     * either side; re-bracketed in round 14 on WALL/CPU dominance, not
-    * just spill (ProbeLshVerifyAB, alternating A/B on the same banded
-    * candidates, 64 g heap, min-of-4 warm):
+    * just spill (commit d0a4515, OPTIMIZATION_r14.md: alternating A/B
+    * on the same banded candidates, 64 g heap, min-of-4 warm):
     *
     *   |  docs | candidates | raw wall/cpu | sift wall/cpu | winner |
     *   |    5k |       7.8k | 0.30 / 0.44  | 0.47 / 0.39   | raw    |
@@ -2092,7 +2092,8 @@ object TextOps {
        |       ${croundSql("coalesce(n_dup_tok, 0) * 1e0 / n")} AS dup_frac
        |FROM t LEFT JOIN cnt USING (doc_id)
        |ORDER BY doc_id""") { (s, dir) =>
-    // spreadScan examined and REJECTED here (round 13, ProbeQ73AB):
+    // spreadScan examined and REJECTED here (round 13, commit 48029f7,
+    // OPTIMIZATION_r13.md):
     // unlike the q02-family numeric spreads, the exchange must move the
     // full text column, and min-of-4 CPU went 1.67 s plain -> 11.0 s
     // spread (wall 1.98 -> 4.33 s) — the exchange + 32-way partial agg

@@ -1,5 +1,7 @@
 package graft
 
+import graft.engine.Tables
+
 /** Empty-input regression battery (VERDICT r9 item 4): every declared
   * query runs against a SCHEMA-ONLY fixture — all ten tables present
   * with their exact production schemas and 0 rows — and must (a) not
@@ -36,8 +38,23 @@ class EmptyInputSpec extends SparkSpec {
 
   private lazy val dir: String = {
     val out = "/tmp/graft_empty_spec"
-    graft.tools.ProbeEmpty.ensureFixture(spark, out)
+    ensureFixture(out)
     out
+  }
+
+  /** Writes the schema-only fixture (idempotent): each table is the
+    * sf0.001 table's NORMALIZED frame (Tables.table applies the
+    * ts/date/embedding type folds) limited to 0 rows, so the empty dir
+    * exercises exactly the schemas production queries bind to. */
+  private def ensureFixture(out: String): Unit = {
+    val src = "/root/testdata/sf0.001"
+    val done = new java.io.File(out, "_FIXTURE_OK")
+    if (done.isFile) return
+    Tables.names.foreach { n =>
+      Tables.table(spark, src, n).limit(0)
+        .write.mode("overwrite").parquet(s"$out/$n.parquet")
+    }
+    java.nio.file.Files.write(done.toPath, Array.empty[Byte])
   }
 
   /** query -> the exact set of columns whose NULL on empty input is the

@@ -50,7 +50,7 @@ class StreamsSpec extends SparkSpec with org.scalatest.BeforeAndAfterAll {
 
   // ---- audit artifact (VERDICT r6 item 7): every canon() call above is
   // one side of a batch≡stream replay equivalence; recording its hash
-  // per test and dumping docs/STREAMS_r{N}.json at suite end makes the
+  // per test and dumping target/streams_audit.json at suite end makes the
   // streaming coverage auditable without reading test logs. The asserts
   // remain the gate — the artifact is the visible record of what ran.
   private var currentTest: String = ""
@@ -71,7 +71,7 @@ class StreamsSpec extends SparkSpec with org.scalatest.BeforeAndAfterAll {
       // (suite-level with a 1/3 floor — NOT per-test halves — so cold
       // forked-JVM first tests can't false-fail; see
       // StreamsAudit.gateOutcome). The gate's full outcome — ran or
-      // skipped, and why — is embedded in STREAMS_r{N}.json (VERDICT r9
+      // skipped, and why — is embedded in the audit JSON (VERDICT r9
       // item 3), and the suite asserts the record actually landed.
       val gate = StreamsAudit.gateOutcome()
       val json = StreamsAudit.write(Some(gate))
